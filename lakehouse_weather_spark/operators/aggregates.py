@@ -1297,7 +1297,10 @@ def q_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )["price_c"].cast("bigint")
 
-    return cum.groupBy("l_returnflag").agg(
+    # the oracle's equi-join back drops NULL-flag rows; keep parity
+    return cum.where(F.col("l_returnflag").isNotNull()).groupBy(
+        "l_returnflag"
+    ).agg(
         _q(1).alias("p25_price_c"),
         _q(2).alias("p50_price_c"),
         _q(3).alias("p75_price_c"),

@@ -12,6 +12,9 @@ real cluster unchanged:
   byte-identical across cluster timezones (and match the DuckDB oracle).
 - Shuffle partitions sized from the local core count; on a cluster this
   is expected to be overridden (or left to AQE's initialPartitionNum).
+- Driver heap ceiling sized from the host's RAM (half of ``MemTotal``,
+  at most 16g) and committed lazily: no ``-Xms``/``AlwaysPreTouch``, so
+  the driver's footprint is what the workload uses, not the ceiling.
 """
 
 from __future__ import annotations
@@ -27,6 +30,61 @@ def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", _DEF_SF_DIR)
 
 
+# Default driver heap ceiling: half the host's RAM, never above 16g.
+# The heap is the JVM's ceiling, committed lazily as G1 needs it; the
+# other half covers what lives outside it: the JVM's non-heap memory
+# (2g reserved code cache, metaspace, thread stacks, Arrow/Netty direct
+# buffers, RocksDB state stores), one Python worker per core, and the
+# page cache the parquet scans read through. At 3/4 a 15.7 GB host
+# would leave ~4 GB for all of that, within reach of the OOM killer
+# that stopped the old fixed 16g default there; the JVM's own default
+# (1/4 of RAM, 3.9g on that host) is below the 6g the test suite
+# already needs. 16g is the largest heap a full 421-query bench has
+# asked for (peak G1 heap 12-14 GB), so bigger hosts keep that.
+_HEAP_CAP_MB = 16 * 1024
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` default: ``MemTotal`` / 2, capped at
+    16g; the cap itself where ``MemTotal`` cannot be read."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(
+                int(line.split()[1])
+                for line in fh
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{_HEAP_CAP_MB}m"
+    return f"{min(_HEAP_CAP_MB, kb // 1024 // 2)}m"
+
+
+def driver_memory_options() -> tuple[str, str]:
+    """(``spark.driver.memory``, ``spark.driver.extraJavaOptions``):
+    ``SPARK_GRAFT_DRIVER_MEM`` / ``SPARK_GRAFT_DRIVER_JAVA_OPTS`` when
+    set, else the host-sized heap and a 2g JIT code cache.
+
+    No ``-Xms`` and no ``-XX:+AlwaysPreTouch`` by default: pre-touching
+    7/8 of a 6g heap made the driver's RSS ~6.2 GB on a workload that
+    uses ~2 GB (4-core, 15.7 GB host), and at the old 16g default it
+    got the driver OOM-killed on that host. Hosts that fault fresh pages slowly can still
+    opt back in through ``SPARK_GRAFT_DRIVER_JAVA_OPTS``.
+
+    JIT code cache: a 400+-query session generates hundreds of
+    distinct whole-stage-codegen classes; the JVM default (~240 MB)
+    fills mid-run, after which the JIT flushes/stops compiling and the
+    session tail runs partially interpreted (measured: uncontended
+    tail-half of the bench 197 s -> 180 s with 2g). Reservation is
+    virtual address space, committed lazily.
+    """
+    return (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        os.environ.get(
+            "SPARK_GRAFT_DRIVER_JAVA_OPTS", "-XX:ReservedCodeCacheSize=2g"
+        ),
+    )
+
+
 def get_spark(
     app_name: str = "lakehouse_weather_spark",
     master: str | None = None,
@@ -38,24 +96,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = cpus
 
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-    # default pre-touched initial heap: 7/8 of the driver heap (14g at
-    # the 16g default), floored/capped so a smaller
-    # SPARK_GRAFT_DRIVER_MEM can never produce Xms > Xmx (fails JVM
-    # boot). r11 A/B at sf0.1 local[32]: the r10 default (3/8 = 6g)
-    # left the rest of the heap to grow lazily mid-run, and on hosts
-    # that service fresh anonymous pages slowly (~450 MB/s here) that
-    # growth taxed EVERY query a little — full-bench timed total
-    # 359/361 s (6g, two runs) vs 283/330 s (14g, two runs). Peak G1
-    # heap over a 421-query session is ~12-14 GB, so 7/8 pre-touches
-    # the whole working heap at boot (a one-time, untimed cost).
-    try:
-        heap_gb = int(driver_mem.lower().rstrip("g"))
-        xms_flags = (
-            f" -Xms{max(1, heap_gb * 7 // 8)}g -XX:+AlwaysPreTouch"
-        )
-    except ValueError:  # non-"<n>g" spec: skip the pretouch default
-        xms_flags = ""
+    driver_mem, java_opts = driver_memory_options()
 
     # Export the vendored protobuf onto PYTHONPATH BEFORE the JVM
     # boots: transformWithState's Python workers (spawned by the JVM)
@@ -78,33 +119,9 @@ def get_spark(
         # does (observed: sf1 slope bench, 32 threads). Only effective
         # when THIS process launches the JVM (true for every CLI/test
         # entry here); a cluster deployment sizes executors instead.
+        # Both values are documented in driver_memory_options().
         .config("spark.driver.memory", driver_mem)
-        # JIT code cache: a 400+-query session generates hundreds of
-        # distinct whole-stage-codegen classes; the JVM default
-        # (~240 MB) fills mid-run, after which the JIT flushes/stops
-        # compiling and the session tail runs partially interpreted
-        # (measured: uncontended tail-half of the bench 197 s -> 180 s
-        # with 2g). Reservation is virtual address space, committed
-        # lazily — cheap insurance for any long-lived driver.
-        #
-        # -Xms6g -XX:+AlwaysPreTouch: this sandbox services FRESH
-        # anonymous-page faults pathologically slowly (~50-300 MB/s
-        # measured; vmstat shows up to 28% hypervisor steal during
-        # fault storms), so lazy heap-capacity growth mid-run (G1 grew
-        # 2.4 -> 5.3 GB over a 421-query bench) lands multi-second
-        # stalls on whichever queries trigger expansion. Pre-touching a
-        # peak-sized heap at boot moves that one-time cost out of query
-        # time (G1 pre-touches with its parallel GC threads). Measured:
-        # full bench 492/536 s (two runs, lazy) -> 450 s (pre-touched).
-        # On a normal kernel/hypervisor this is still standard practice
-        # for latency-sensitive JVMs and costs only boot time.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                "-XX:ReservedCodeCacheSize=2g" + xms_flags,
-            ),
-        )
+        .config("spark.driver.extraJavaOptions", java_opts)
         # --- correctness / determinism ---
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")

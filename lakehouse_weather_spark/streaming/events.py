@@ -21,6 +21,10 @@ from pyspark.sql import functions as F
 from lakehouse_weather_spark.functions import dsum, sql_dsum
 from lakehouse_weather_spark.registry import register
 from lakehouse_weather_spark.sources.tables import load_table, with_event_ts
+from lakehouse_weather_spark.streaming.runner import (
+    run_available_now,
+    session_conf,
+)
 
 
 def _ts_ltz(df):
@@ -243,15 +247,13 @@ def stream_sessionize(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    q = (
+    writer = (
         stream.writeStream.format("memory")
         .queryName("stream_sessions")
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    run_available_now(writer, 120)
     return spark.table("stream_sessions")
 
 
@@ -281,15 +283,13 @@ def stream_enrich(
         .join(customer, "c_custkey")
         .select("event_id", "user_id", "event_type", "c_mktsegment")
     )
-    q = (
+    writer = (
         stream.writeStream.format("memory")
         .queryName("stream_enriched")
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    run_available_now(writer, 120)
     return spark.table("stream_enriched")
 
 
@@ -350,16 +350,14 @@ def stream_merge_sink(
             lambda path: merge_upsert(s, base_path, latest, "user_id", path),
         )
 
-    q = (
+    writer = (
         spark.readStream.schema(static_schema)
         .parquet(events_dir)
         .transform(_ts_ltz)
         .writeStream.foreachBatch(upsert_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    run_available_now(writer, 120)
     return read_current(spark, target_dir).count()
 
 
@@ -379,16 +377,17 @@ def stream_stream_join(
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Stream-stream joins keep one state store PER shuffle partition
     # and PER side; at this corpus size 32 partitions are pure store
-    # open/commit overhead (measured 8.4 s -> ~3 s at 8). State
+    # open/commit overhead (measured 8.4 s -> ~3 s at 8), and more
+    # partitions than cores only adds task waves (4-core host, sf0.001
+    # traced run: 8 -> 4 took the join lifecycle from 7.6 s to 6.3 s,
+    # same micro-batches). State
     # partitioning is fixed by the FIRST run's conf via the
     # checkpoint — exactly how a deployment sizes it — so set it for
     # the stream build and restore after.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # restore in finally: a thrown build error or awaitTermination
-    # timeout must not leave the session-wide conf pinned at 8 for
-    # every later query in the shared bench/gate session
-    try:
+    state_parts = min(8, spark.sparkContext.defaultParallelism)
+    with session_conf(
+        spark, "spark.sql.shuffle.partitions", str(state_parts)
+    ):
         schema = spark.read.parquet(left_dir).schema
 
         views = (
@@ -424,17 +423,13 @@ def stream_stream_join(
                 < F.col("view_ts") + F.expr("INTERVAL 1 HOUR")
             ),
         ).select("view_id", "click_id", "v_user", "view_ts", "click_ts")
-        q = (
+        writer = (
             joined.writeStream.format("memory")
             .queryName(queryname)
             .outputMode("append")
             .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(180)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        run_available_now(writer, 180)
     return spark.table(queryname)
 
 
@@ -496,15 +491,13 @@ def stream_stream_left_join(
         & (F.col("click_ts") < F.col("view_ts") + F.expr("INTERVAL 1 HOUR")),
         "leftOuter",
     ).select("view_id", "click_id", "v_user", "view_ts", "click_ts")
-    q = (
+    writer = (
         joined.writeStream.format("memory")
         .queryName("view_click_left_joins")
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(180)
+    run_available_now(writer, 180)
     return spark.table("view_click_left_joins")
 
 
@@ -570,15 +563,13 @@ def stream_stream_full_join(
     ).select(
         "view_id", "click_id", "v_user", "c_user", "view_ts", "click_ts"
     )
-    q = (
+    writer = (
         joined.writeStream.format("memory")
         .queryName("view_click_full_joins")
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(180)
+    run_available_now(writer, 180)
     return spark.table("view_click_full_joins")
 
 
@@ -603,15 +594,13 @@ def stream_dedup(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type", "event_id")
     )
-    q = (
+    writer = (
         stream.writeStream.format("memory")
         .queryName("stream_dedup")
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    run_available_now(writer, 120)
     return spark.table("stream_dedup")
 
 
@@ -656,15 +645,13 @@ def stream_tumbling_counts(
             "n_events",
         )
     )
-    q = (
+    writer = (
         stream.writeStream.format("memory")
         .queryName("tumbling_counts")
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    run_available_now(writer, 120)
     return spark.table("tumbling_counts")
 
 
@@ -701,15 +688,13 @@ def stream_sliding_counts(
             "sum_value",
         )
     )
-    q = (
+    writer = (
         stream.writeStream.format("memory")
         .queryName("sliding_counts")
         .outputMode("complete")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    run_available_now(writer, 120)
     return spark.table("sliding_counts")
 
 
@@ -744,15 +729,13 @@ def stream_session_window(
             "n_events",
         )
     )
-    q = (
+    writer = (
         stream.writeStream.format("memory")
         .queryName("session_window_counts")
         .outputMode("complete")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    run_available_now(writer, 120)
     return spark.table("session_window_counts")
 
 
@@ -1518,16 +1501,14 @@ def stream_zset_ivm(
 
         publish(target_dir, write_version)
 
-    q = (
+    writer = (
         spark.readStream.schema("event_type string, fx bigint, w int")
         .option("maxFilesPerTrigger", 1)  # force multi-batch folding
         .parquet(changelog_dir)
         .writeStream.foreachBatch(fold_batch)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    run_available_now(writer, 120)
 
 
 @register(
@@ -1653,15 +1634,13 @@ def stream_dedup_to_files(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type", "event_id")
     )
-    q = (
+    writer = (
         stream.writeStream.format("parquet")
         .option("path", out_dir)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    run_available_now(writer, 120)
 
 
 def stream_static_enrich(
@@ -1689,15 +1668,13 @@ def stream_static_enrich(
         .transform(_ts_ltz)
         .join(F.broadcast(dim), "user_id", "left")
     )
-    q = (
+    writer = (
         stream.writeStream.format("memory")
         .queryName(queryname)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(120)
+    run_available_now(writer, 120)
     return spark.table(queryname)
 
 
@@ -1914,9 +1891,14 @@ def q_stream_session_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.symlink(f, link)
     n_real = len(srcs)
     # sentinel files (user -1, far future): each its own micro-batch
-    # so the watermark advances -> timers REGISTER -> timers FIRE;
-    # mtimes pinned because FileStreamSource breaks same-second ties
-    # arbitrarily (sentinels must process after the data, in order)
+    # so the watermark advances -> timers REGISTER -> timers FIRE.
+    # FileStreamSource orders files by mtime (a link's is its
+    # target's) and breaks same-second ties arbitrarily, so the
+    # sentinels are stamped 100 s apart after the newest real file.
+    # The real files share the first batch (maxFilesPerTrigger=n_real),
+    # so their own order does not matter and their times stay as they
+    # are: the corpus is read-only input.
+    newest = max(os.stat(f).st_mtime for f in srcs)
     t0 = pq.read_table(srcs[0], columns=None).slice(0, 1)
     ts_type = t0.schema.field("ts").type
     import pyarrow.compute as pc
@@ -1969,12 +1951,7 @@ def q_stream_session_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
             row, path, coerce_timestamps="us",
             allow_truncated_timestamps=True,
         )
-        os.utime(path, (1_800_000_000 + k * 100,) * 2)
-    for i in range(n_real):
-        os.utime(
-            os.path.join(events_dir, f"{i:04d}.parquet"),
-            (1_700_000_000 + i,) * 2,
-        )
+        os.utime(path, (newest + k * 100,) * 2)
     sink = stream_session_eviction(
         spark,
         events_dir,

@@ -34,6 +34,7 @@ recompute-the-world loop.
 from __future__ import annotations
 
 import importlib.util
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +45,12 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from lakehouse_weather_spark.streaming.runner import (
+    run_available_now,
+    session_conf,
+)
+
 
 def _find_protobuf() -> bool:
     try:
@@ -121,6 +128,19 @@ _TWS_WORKERS_OK = _tws_workers_ok()
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+
+def _state_store(spark: SparkSession, backend: str):
+    """transformWithState requires the RocksDB state store: set it for
+    this stream's run only, so later stateful streams in the session
+    keep the session's own provider."""
+    if backend != "tws":
+        return nullcontext()
+    return session_conf(
+        spark, "spark.sql.streaming.stateStore.providerClass",
+        _ROCKSDB_PROVIDER,
+    )
+
 
 # state carried per user: event count, value total, last event-time
 # (epoch micros — exact integer, no float drift across batches)
@@ -238,11 +258,6 @@ def stream_running_profile(
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if backend == "tws":
-        # transformWithState requires the RocksDB state store
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        )
     static = spark.read.parquet(events_dir)
 
     reader = spark.readStream.schema(static.schema)
@@ -257,15 +272,14 @@ def stream_running_profile(
     import hashlib
 
     name = "profile_" + hashlib.md5(checkpoint_dir.encode()).hexdigest()[:16]
-    q = (
+    writer = (
         stream.writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(180)
+    with _state_store(spark, backend):
+        run_available_now(writer, 180)
     return spark.table(name)
 
 
@@ -479,11 +493,6 @@ def stream_session_eviction(
         raise ValueError(f"unknown backend {backend!r}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if backend == "tws":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            _ROCKSDB_PROVIDER,
-        )
     static = spark.read.parquet(events_dir)
     reader = spark.readStream.schema(static.schema)
     if max_files_per_trigger is not None:
@@ -528,15 +537,14 @@ def stream_session_eviction(
     name = "sess_evict_" + hashlib.md5(
         checkpoint_dir.encode()
     ).hexdigest()[:16]
-    q = (
+    writer = (
         out.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(180)
+    with _state_store(spark, backend):
+        run_available_now(writer, 180)
     return spark.table(name)
 
 
@@ -644,15 +652,13 @@ def stream_heavy_users(
     import hashlib
 
     name = "hh_" + hashlib.md5(checkpoint_dir.encode()).hexdigest()[:16]
-    q = (
+    writer = (
         stream.writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    run_available_now(writer, None)
     from pyspark.sql import functions as F
 
     tbl = spark.table(name)

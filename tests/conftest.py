@@ -21,9 +21,8 @@ def spark():
     # fresh warehouse per test session: managed-table locations outlive
     # the in-memory catalog, so a reused dir breaks saveAsTable
     os.environ["SPARK_GRAFT_WAREHOUSE"] = tempfile.mkdtemp(prefix="lws_wh_")
-    # sf0.001 fixtures never need the 16g bench heap, and the session
-    # default pre-touches Xms at boot — right-sizing keeps suite boot
-    # fast on hosts with slow first-touch paging
+    # sf0.001 fixtures need far less than the host-sized default heap;
+    # a fixed 6g ceiling keeps the suite's memory the same on any host
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
     s = get_spark("tests", shuffle_partitions=8)
     yield s
